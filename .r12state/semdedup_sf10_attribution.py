@@ -14,7 +14,7 @@ spark = (SparkSession.builder.master("local[32]")
 
 from clearcare_data_pipeline_spark.operators.clustering import (
     SEMDEDUP_FLAT_MAX_N, SEMDEDUP_TARGET_WIDTH, hierarchical_assign)
-from clearcare_data_pipeline_spark.operators.similarity import with_norm, cosine_expr
+from clearcare_data_pipeline_spark.operators.similarity import with_norm, dot_expr
 from clearcare_data_pipeline_spark.queries.similarity import _emb, _NEAR_DUP_MOD, _SEMDEDUP_ITERS
 
 SF = ".localdata/sf10"
@@ -53,8 +53,8 @@ a = d.select(F.col("vec_id").alias("_a_id"), F.col("dvec").alias("_a_vec"),
 b = d.select(F.col("vec_id").alias("_b_id"), F.col("dvec").alias("_b_vec"),
              F.col("norm").alias("_b_norm"), "cluster")
 dup_ids = (a.join(b, "cluster").where(F.col("_a_id") < F.col("_b_id"))
-           .where(F.round(cosine_expr(F.col("_a_vec"), F.col("_b_vec"),
-                                      F.col("_a_norm"), F.col("_b_norm")), 6) >= 0.99)
+           .where(F.round(dot_expr(F.col("_a_vec"), F.col("_b_vec"))
+                          / (F.col("_a_norm") * F.col("_b_norm")), 6) >= 0.99)
            .select(F.col("_b_id").alias("vec_id")).distinct())
 n_dups = dup_ids.count()
 res["pairwise_scoring_sec"] = round(time.time() - t0, 2)

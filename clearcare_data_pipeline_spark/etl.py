@@ -78,8 +78,13 @@ def run_etl(
     result = run_cleaning_pipeline(charges)
     clean_path = os.path.join(output_dir, "cleaned", campus_id)
     quarantine_path = os.path.join(output_dir, "quarantine", campus_id)
-    result.clean.write.mode("overwrite").parquet(clean_path)
-    result.quarantine.write.mode("overwrite").parquet(quarantine_path)
+    try:
+        result.clean.write.mode("overwrite").parquet(clean_path)
+        result.quarantine.write.mode("overwrite").parquet(quarantine_path)
+    finally:
+        # blocking: the cached blocks are gone when run_etl returns, so
+        # their removal does not overlap the caller's next job
+        result.tagged.unpersist(blocking=True)
 
     # --- devlog (K5): one JSON document of run metrics ---------------
     clean_df = spark.read.parquet(clean_path)

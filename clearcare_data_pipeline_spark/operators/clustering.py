@@ -864,36 +864,6 @@ def _flat_kmeans_parts(
     return parts, _assign(prev)
 
 
-def hierarchical_kmeans_oracle_sql(
-    table: str,
-    vec_col: str,
-    id_col: str,
-    target: int = SEMDEDUP_TARGET_WIDTH,
-    branch: int = HIER_BRANCH,
-    iters: int = 2,
-    levels: int = HIER_MAX_LEVELS,
-) -> str:
-    """DuckDB twin of ``hierarchical_assign``: the fixed-depth unroll
-    of the recursive splitting as chained CTEs. Every level computes
-    the oversized-cluster set from the previous assignment, replays the
-    deterministic per-cluster Lloyd's run (windowed init, narrow
-    (vid, cluster, sub, d) assignment rows — the sf1 lesson from
-    ``kmeans_oracle_sql`` — DECIMAL-summed means, empty subs keeping
-    their previous centroid), and re-encodes ids by ``branch + 1``.
-    Levels whose split set is empty degenerate to empty scans plus the
-    same id re-encode the Spark side applies on early exit.
-
-    Unlike the flat twin (whose e x k cross join is O(n x n/width) at
-    auto-k), every level here is O(n x branch) rows — the oracle
-    itself stays feasible at sf10."""
-    parts, final = _hier_kmeans_parts(target, branch, iters, levels)
-    e = _e_cte(table, vec_col, id_col)
-    return (
-        "WITH " + ",\n".join([e, *parts])
-        + f"\nSELECT vid AS {id_col}, cluster FROM {final}"
-    )
-
-
 def _hier_kmeans_parts(
     target: int,
     branch: int,

@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-REPORT_COLUMNS = ["check_name", "n_rows", "n_violations", "passed"]
-
 
 def row_check_report(df: DataFrame, checks: dict[str, Column]) -> DataFrame:
     """Evaluate row-level boolean constraints in one pass.

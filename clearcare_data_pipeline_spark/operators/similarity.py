@@ -84,17 +84,6 @@ def _vec_bytes_estimate(dim: int, max_rows: int) -> int:
     return max_rows * (dim * 8 + 32)
 
 
-def _estimated_vec_bytes(df: DataFrame, max_rows: int, vec_col: str = "embedding") -> int:
-    """Byte estimate with the dimension probed from one row (a LIMIT-1
-    job). The flat-branch caller avoids even this by folding the dim
-    into its existing LIMIT count probe; this standalone form serves
-    direct callers. An empty corpus estimates 0 and broadcasts
-    trivially."""
-    head = df.select(F.size(F.col(vec_col)).alias("d")).head(1)
-    dim = int(head[0]["d"]) if head and head[0]["d"] is not None else 0
-    return _vec_bytes_estimate(dim, max_rows)
-
-
 def as_double_vec(col: Column) -> Column:
     """float32 array -> double array (exact widening; all downstream
     arithmetic is then engine-portable)."""
@@ -109,7 +98,7 @@ def dot_expr(a: Column, b: Column) -> Column:
 
 # Codegen-size bound for the unrolled dot below: a single dot of
 # <= 256 terms compiles fine, unlike the 64-planes x 64-dims = 4096
-# term matrix that pushed lsh_bucket_expr to a runtime loop.
+# term matrix that pushed the LSH signature fold to a runtime loop.
 DOT_UNROLL_MAX_DIM = 256
 
 
@@ -162,10 +151,6 @@ def probed_dot(df: DataFrame, vec_col: str = "embedding"):
 
 def norm_expr(v: Column) -> Column:
     return F.sqrt(dot_expr(v, v))
-
-
-def cosine_expr(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
-    return dot_expr(a, b) / (norm_a * norm_b)
 
 
 def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -263,28 +248,6 @@ def cosine_topk(
     )
 
 
-def lsh_bucket_expr(dvec: Column, num_planes: int = NUM_PLANES) -> Column:
-    """``num_planes``-bit hyperplane signature: bit j set iff
-    dot(v, plane_j) >= 0.
-
-    One ``transform`` over a constant plane-matrix literal (runtime
-    loop) instead of unrolled dot-product trees — same
-    codegen-size rationale as ``ivf_cell_expr``.
-
-    Both sides of each dot are sliced to min(len(v), PLANE_DIM) first
-    (ADVICE r7 #1): ``zip_with`` null-pads the shorter array, so a
-    vector whose length differs from the 64-long plane literal used to
-    turn every product NULL — every bit fell to the otherwise(0) branch
-    and all such vectors collapsed into bucket 0 (a silent O(n^2) pair
-    join). The slice restores the plane-PREFIX semantics the pandas
-    path (``pm[:, :x.shape[1]]``) and the DuckDB ``_bucket_sql`` twin
-    always had, so the three evaluators agree for any dimension."""
-    planes = F.array(
-        *[F.array(*[F.lit(w) for w in _plane(j)]) for j in range(num_planes)]
-    )
-    return lsh_bucket_from_mat(dvec, planes)
-
-
 def lsh_bucket_from_mat(dvec: Column, pmat: Column) -> Column:
     """The signature fold over a plane matrix COLUMN — the shape
     ``lsh_buckets`` actually executes (r9): the plane matrix rides a
@@ -293,7 +256,16 @@ def lsh_bucket_from_mat(dvec: Column, pmat: Column) -> Column:
     expression tree, whose per-query Python construction + analysis
     cost was ~0.6 s of the near-dup operator's small-scale fixed
     overhead. Values are bit-identical either way — the runtime fold
-    is the same; only where the plane bytes live changes."""
+    is the same; only where the plane bytes live changes.
+
+    Both sides of each dot are sliced to min(len(v), PLANE_DIM) first
+    (ADVICE r7 #1): ``zip_with`` null-pads the shorter array, so a
+    vector whose length differs from the 64-long plane rows used to
+    turn every product NULL — every bit fell to the otherwise(0) branch
+    and all such vectors collapsed into bucket 0 (a silent O(n^2) pair
+    join). The slice restores the plane-PREFIX semantics the pandas
+    path (``pm[:, :x.shape[1]]``) and the DuckDB ``_bucket_sql`` twin
+    always had, so the three evaluators agree for any dimension."""
     n = F.least(F.size(dvec), F.lit(PLANE_DIM))
     v = F.slice(dvec, 1, n)
     bits = F.transform(

@@ -38,16 +38,13 @@ from clearcare_data_pipeline_spark.plans.rules import RULE_NAMES, split_clean_qu
 from clearcare_data_pipeline_spark.schema import CANONICAL_COLUMNS
 
 
-def clean_charges(
-    df: DataFrame, *, normalize_types: bool = True, validate: bool = True, dedup: bool = True
-) -> DataFrame:
+def clean_charges(df: DataFrame, *, validate: bool = True, dedup: bool = True) -> DataFrame:
     """The full cleaning transform chain; returns the cleaned canonical
     table (typed prices, normalized text/modifiers/code types, invalid
     code formats filtered, exact duplicates dropped)."""
     df = normalize_headers(df)
     df = ensure_columns(df, CANONICAL_COLUMNS)
-    if normalize_types:
-        df = normalize_code_type(df)
+    df = normalize_code_type(df)
     df = clean_price_fields(df)
     df = scrub_invalid_tokens(df, [c for c in CANONICAL_COLUMNS if c not in
                                    {"negotiated_price", "negotiated_percentage", "gross_charge",
@@ -76,6 +73,9 @@ def clean_charges(
 class CleaningResult:
     clean: DataFrame
     quarantine: DataFrame
+    # persisted frame under clean and quarantine; the caller unpersists
+    # it once both sinks are written
+    tagged: DataFrame
     score: float
     rule_counts: dict[str, int] = field(default_factory=dict)
     clean_rows: int = 0
@@ -86,36 +86,36 @@ class CleaningResult:
 def run_cleaning_pipeline(df: DataFrame) -> CleaningResult:
     """Clean -> tag -> split -> score. Persists the tagged plan across
     its three consumers (clean sink, quarantine sink, metrics) so the
-    source is scanned once."""
+    source is scanned once; the caller writes both sinks and then
+    unpersists ``result.tagged``."""
     tagged = tag_violations(clean_charges(df)).persist()
     try:
         metrics = violation_counts(tagged).collect()[0].asDict()
-        clean, quarantine = split_clean_quarantine(tagged)
-        clean = clean.drop("code_type_raw", "negotiated_algorithm_invalid")
-        rule_counts = {r: int(metrics.get(r) or 0) for r in RULE_NAMES}
-        quarantined = int(metrics["quarantined_rows"])
-        clean_rows = int(metrics["total_rows"]) - quarantined
-        score = transparency_score(clean_rows, rule_counts)
-        return CleaningResult(
-            clean=clean,
-            quarantine=quarantine,
-            score=score,
-            rule_counts=rule_counts,
-            clean_rows=clean_rows,
-            quarantined_rows=quarantined,
-            algorithm_format_issues=int(metrics.get("algorithm_format_issues") or 0),
-        )
-    finally:
-        # Plans returned in the result keep the persisted lineage; the
-        # caller materializes them before this session ends.
-        pass
+    except BaseException:
+        tagged.unpersist()
+        raise
+    clean, quarantine = split_clean_quarantine(tagged)
+    clean = clean.drop("code_type_raw", "negotiated_algorithm_invalid")
+    rule_counts = {r: int(metrics.get(r) or 0) for r in RULE_NAMES}
+    quarantined = int(metrics["quarantined_rows"])
+    clean_rows = int(metrics["total_rows"]) - quarantined
+    return CleaningResult(
+        clean=clean,
+        quarantine=quarantine,
+        tagged=tagged,
+        score=transparency_score(clean_rows, rule_counts),
+        rule_counts=rule_counts,
+        clean_rows=clean_rows,
+        quarantined_rows=quarantined,
+        algorithm_format_issues=int(metrics.get("algorithm_format_issues") or 0),
+    )
 
 
-def score_summary(df: DataFrame, *, already_clean: bool = False) -> DataFrame:
-    """One-row DataFrame version of the score computation (A11) —
-    fully declarative so it can run inside a larger plan (and be
-    oracle-checked in SQL)."""
-    tagged = tag_violations(df if already_clean else clean_charges(df))
+def score_summary(cleaned: DataFrame) -> DataFrame:
+    """One-row DataFrame version of the score computation (A11) over an
+    already-cleaned table — fully declarative so it can run inside a
+    larger plan (and be oracle-checked in SQL)."""
+    tagged = tag_violations(cleaned)
     agg = tagged.agg(
         F.count(F.lit(1)).alias("total_rows"),
         F.count(F.when(F.col("rules_violated") != "", F.lit(1))).alias("quarantined_rows"),

@@ -40,30 +40,11 @@ def code_type_histogram(df: DataFrame) -> DataFrame:
     )
 
 
-def unknown_code_type_histogram(df: DataFrame) -> DataFrame:
-    """A3: counts of raw types that failed normalization (needs
-    ``code_type_raw`` from ``normalize_code_type``)."""
-    return (
-        df.where(F.col("code_type").isNull() & (F.trim(F.coalesce(F.col("code_type_raw"), F.lit(""))) != ""))
-        .groupBy(F.upper(F.trim(F.col("code_type_raw"))).alias("raw_code_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def missing_code_types(df: DataFrame) -> list[str]:
     """A4: allowed types never observed (driver-side set diff on a
     broadcast-scale aggregate)."""
     seen = {r["code_type"] for r in code_type_histogram(df).collect()}
     return [t for t in ALLOWED_CODE_TYPES if t not in seen]
-
-
-def code_type_mapping_audit(df: DataFrame) -> DataFrame:
-    """A5: raw type -> set of normalized types it mapped to."""
-    return (
-        df.where(F.col("code_type").isNotNull())
-        .groupBy(F.upper(F.trim(F.col("code_type_raw"))).alias("raw_code_type"))
-        .agg(F.sort_array(F.collect_set("code_type")).alias("normalized_types"))
-    )
 
 
 def modifier_counts(df: DataFrame) -> DataFrame:

@@ -46,7 +46,7 @@ Exclusions (each with the reason it cannot hide a semantic change):
   remap changes the closure and therefore the hash.
 
 Everything else inside the package (operators/, sources/, functions/,
-plans/, streaming/, the query modules, _oracle_expr) participates.
+plans/, the query modules, _oracle_expr) participates.
 Code outside the package (tools/verify_local.py's compare logic,
 bench.py) is deliberately out of scope: it determines how results are
 CHECKED or TIMED, not what the engine computes, and its history is

@@ -75,7 +75,7 @@ def runnable_queries(exclude_classes: set[str] | frozenset[str] = frozenset()) -
     ]
 
 
-def all_queries() -> dict[str, QueryFn]:
+def _query_modules() -> tuple:
     from clearcare_data_pipeline_spark.queries import (
         advanced,
         charges,
@@ -92,30 +92,18 @@ def all_queries() -> dict[str, QueryFn]:
         tpch_extra3,
     )
 
+    return (relational, tpch_extra, tpch_extra2, tpch_extra3, advanced, stats, charges, textops, textops2, textops3, similarity, eventsops, extractors)
+
+
+def all_queries() -> dict[str, QueryFn]:
     out: dict[str, QueryFn] = {}
-    for mod in (relational, tpch_extra, tpch_extra2, tpch_extra3, advanced, stats, charges, textops, textops2, textops3, similarity, eventsops, extractors):
+    for mod in _query_modules():
         out.update(mod.QUERIES)
     return out
 
 
 def all_oracles() -> dict[str, str]:
-    from clearcare_data_pipeline_spark.queries import (
-        advanced,
-        charges,
-        eventsops,
-        extractors,
-        relational,
-        similarity,
-        stats,
-        textops,
-        textops2,
-        textops3,
-        tpch_extra,
-        tpch_extra2,
-        tpch_extra3,
-    )
-
     out: dict[str, str] = {}
-    for mod in (relational, tpch_extra, tpch_extra2, tpch_extra3, advanced, stats, charges, textops, textops2, textops3, similarity, eventsops, extractors):
+    for mod in _query_modules():
         out.update(mod.ORACLES)
     return out

@@ -132,12 +132,6 @@ def rule_predicates_sql() -> dict[str, str]:
     }
 
 
-_OTHER_STRING_COLS = [
-    c for c in CANONICAL_COLUMNS
-    if c not in PRICE_FIELDS and c not in TEXT_FIELDS and c not in {"modifiers", "code_type"}
-]
-
-
 def cleaned_charges_cte(lineitem_relation: str = "lineitem", *, dedup: bool = True) -> str:
     """Full DuckDB mirror of ``pipeline.clean_charges``: derivation ->
     code-type normalization -> price typing -> token scrub -> text &

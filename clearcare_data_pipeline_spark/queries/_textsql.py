@@ -38,16 +38,13 @@ NON_WORD_NON_WS_CLASS = "[^0-9A-Za-z_ \\t\\n\\x0B\\f\\r]"
 NON_ALNUM_NON_WS_CLASS = "[^A-Za-z0-9 \\t\\n\\x0B\\f\\r]"
 BPE_TOKEN_RE = "[A-Za-z]+|[0-9]+|" + NON_ALNUM_NON_WS_CLASS
 
-# DuckDB twin of Spark's trim (r13 finding): Spark F.trim strips
-# ONLY 0x20; DuckDB's bare one-arg trim also strips Unicode
-# space-class characters (NBSP U+00A0, EM SPACE U+2003, ...), so a
-# leading/trailing Zs char silently diverges the engines. The two-arg
-# form pins the character set. Parity per character in
-# tests/test_ws_convention.py. Vacuous on the pure-ASCII gated
-# corpora — same defense-in-depth class as the U+000B fix above.
-def trim_sql(expr: str) -> str:
-    return f"trim({expr}, ' ')"
-
+# Oracles spell Spark's trim as the two-arg ``trim(x, ' ')`` (r13
+# finding): Spark F.trim strips ONLY 0x20; DuckDB's bare one-arg trim
+# also strips Unicode space-class characters (NBSP U+00A0, EM SPACE
+# U+2003, ...), so a leading/trailing Zs char silently diverges the
+# engines. The two-arg form pins the character set. Parity per
+# character in tests/test_ws_convention.py. Vacuous on the pure-ASCII
+# gated corpora — same defense-in-depth class as the U+000B fix above.
 
 # Whitespace-squeezed lowercase md5 fingerprint of `text` — the DuckDB
 # twin of operators/textstats.fingerprint_expr.

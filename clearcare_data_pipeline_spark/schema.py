@@ -69,10 +69,6 @@ REFERENCE_HEADERS: list[str] = [
 ]
 
 CANONICAL_TO_REFERENCE: dict[str, str] = dict(zip(CANONICAL_COLUMNS, REFERENCE_HEADERS))
-REFERENCE_TO_CANONICAL: dict[str, str] = dict(zip(REFERENCE_HEADERS, CANONICAL_COLUMNS))
-
-# All-string ingest schema — typing is a later, explicit projection.
-CHARGES_RAW_SCHEMA = StructType([StructField(c, StringType(), True) for c in CANONICAL_COLUMNS])
 
 # --- semantic column groups (cleaning_utils.py:9-17) ------------------
 PRICE_FIELDS: list[str] = [
@@ -197,18 +193,6 @@ SLUG_STOPWORDS: list[str] = [
     "of",
     "and",
 ]
-
-# Modifier vocabulary (config.yaml:39-46) — used for devlog audits only;
-# unknown modifiers pass through.
-KNOWN_MODIFIERS: dict[str, str] = {
-    "26": "professional component",
-    "TC": "technical component",
-    "50": "bilateral procedure",
-    "59": "distinct procedural service",
-    "76": "repeat procedure same physician",
-    "77": "repeat procedure another physician",
-    "GZ": "item or service expected to be denied",
-}
 
 # Driver-provided synthetic tables (TESTDATA.md).
 TESTDATA_TABLES: list[str] = [

@@ -37,15 +37,16 @@ def _default_heap_gib() -> int:
 def get_spark(app_name: str = "clearcare-spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with scale-appropriate defaults.
 
-    ``shuffle_partitions`` defaults to the local core count: at local
-    test scale one partition per core avoids over-parallelizing tiny
-    shuffles; on a real cluster this is overridden (or left to AQE
-    coalescing, which is enabled).
+    ``shuffle_partitions`` defaults to the local core count the master
+    runs on (``$SPARK_GRAFT_CPUS``, or ``os.cpu_count()`` when that is
+    unset or ``*``): at local test scale one partition per core avoids
+    over-parallelizing tiny shuffles; on a real cluster this is
+    overridden (or left to AQE coalescing, which is enabled).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
-        shuffle_partitions = os.cpu_count() or 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else (os.cpu_count() or 32)
 
     builder = (
         SparkSession.builder.appName(app_name)

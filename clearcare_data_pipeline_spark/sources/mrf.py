@@ -11,7 +11,7 @@ from __future__ import annotations
 import csv
 import io
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -46,19 +46,6 @@ def read_csv_after_preamble(spark: SparkSession, path: str) -> DataFrame:
     # P3: blank-fill; P1: header normalize is NOT applied here — raw
     # source column names (with '|') are semantic for the extractors.
     return df.na.fill("")
-
-
-def code_slot_structs(num_slots: int = 4) -> Column:
-    """X1 helper: array of (code, raw_type) structs from code|i cols."""
-    return F.array(
-        *[
-            F.struct(
-                F.col(f"`code|{i}`").alias("code"),
-                F.col(f"`code|{i}|type`").alias("raw_type"),
-            )
-            for i in range(1, num_slots + 1)
-        ]
-    )
 
 
 def explode_code_slots(df: DataFrame, available_cols: list[str]) -> DataFrame:

@@ -41,18 +41,6 @@ def load_registry(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def save_registry(df: DataFrame, path: str) -> None:
-    # collect-then-rewrite: the dimension is tiny and the target may be
-    # the same path we read from (Spark cannot overwrite its own input
-    # lazily).
-    if _is_xlsx(path):
-        save_registry_xlsx(df, path)
-        return
-    rows = df.collect()
-    spark = df.sparkSession
-    spark.createDataFrame(rows, df.schema).write.mode("overwrite").parquet(path)
-
-
 def load_registry_xlsx(spark: SparkSession, path: str, sheet_name: str = "Sheet1") -> DataFrame:
     """S5 (native format): ingest a real ClearCare ``Hospital
     Registry.xlsx`` (hospital_enricher.py:174-186 column layout, read

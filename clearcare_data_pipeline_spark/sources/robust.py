@@ -6,12 +6,6 @@ production CSV feed needs: PERMISSIVE mode parks unparseable lines in
 them; the reader splits parsed rows from quarantined raw lines so the
 pipeline can load what's good and audit what's not (parse-level
 counterpart of the rule-level quarantine in plans/rules.py).
-
-``read_binary_blobs`` — the multimodal ingestion front door:
-``binaryFile`` scans image/audio/video files into (path, length,
-content) rows that feed the mapInPandas feature extractors in
-operators/multimodal.py. Spark distributes file reads across
-executors; nothing driver-side.
 """
 
 from __future__ import annotations
@@ -49,15 +43,3 @@ def read_csv_with_quarantine(
         F.col(CORRUPT_COL).alias("raw_line")
     )
     return parsed, quarantined
-
-
-def read_binary_blobs(
-    spark: SparkSession, path: str, *, glob: str | None = None
-) -> DataFrame:
-    """Distributed binary-file scan: one row per file with (path,
-    modificationTime, length, content). Feed ``content`` to the
-    multimodal Pandas-UDF extractors."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)

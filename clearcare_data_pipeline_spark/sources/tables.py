@@ -9,8 +9,6 @@ from pyspark.sql import functions as F
 
 from clearcare_data_pipeline_spark.schema import TESTDATA_TABLES
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 # Dimension tables stay un-repartitioned: they are broadcast-join sides
 # and a shuffle would only add cost.

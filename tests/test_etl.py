@@ -89,6 +89,21 @@ def test_run_etl_format_dispatch_errors(spark, registry_path, tmp_path):
         )
 
 
+def test_run_etl_releases_cached_frames(spark, registry_path, tmp_path):
+    """run_etl persists the tagged frame for its sinks and metrics and
+    must release it: the session holds no more persisted RDDs after the
+    call than before it."""
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    run_etl(
+        spark,
+        campus_id="general_springfield",
+        raw_path=f"{FIX}/tall.csv",
+        registry_path=registry_path,
+        output_dir=str(tmp_path / "out"),
+    )
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 @pytest.mark.slow
 def test_run_etl_twice_appends_devlog(spark, registry_path, tmp_path):
     out = str(tmp_path / "out")

@@ -159,3 +159,4 @@ def test_extracted_tall_feeds_cleaning(spark):
     # 9 extracted; the 7-digit '0070551' NDC fails R2 format validation
     assert result.clean_rows + result.quarantined_rows == 8
     assert 0.0 <= result.score <= 1.0
+    result.tagged.unpersist()

@@ -1,4 +1,4 @@
-"""Parse-level quarantine + binaryFile ingestion (sources/robust.py)."""
+"""Parse-level quarantine (sources/robust.py)."""
 
 from __future__ import annotations
 
@@ -7,10 +7,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from clearcare_data_pipeline_spark.sources.robust import (  # noqa: E402
-    read_binary_blobs,
-    read_csv_with_quarantine,
-)
+from clearcare_data_pipeline_spark.sources.robust import read_csv_with_quarantine  # noqa: E402
 
 
 def test_csv_quarantine_splits_bad_lines(spark, tmp_path):
@@ -28,30 +25,3 @@ def test_csv_quarantine_splits_bad_lines(spark, tmp_path):
     bad = [r.raw_line for r in quarantined.collect()]
     assert good == [1, 3]
     assert len(bad) == 1 and "not_a_number" in bad[0]
-
-
-def test_binary_blob_scan_feeds_multimodal(spark, tmp_path):
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from clearcare_data_pipeline_spark.operators.multimodal import (
-        image_features,
-        make_fake_image_bytes,
-    )
-
-    d = tmp_path / "blobs"
-    d.mkdir()
-    dims = [(4, 3), (16, 9)]
-    for i, (w, h) in enumerate(dims):
-        (d / f"img{i}.fimg").write_bytes(make_fake_image_bytes(w, h, seed=i))
-    blobs = read_binary_blobs(spark, str(d), glob="*.fimg")
-    assert blobs.count() == 2
-    media = blobs.select(
-        (F.row_number().over(Window.orderBy("path")) - 1).cast("long").alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.col("content"),
-        F.col("path").alias("uri"),
-    )
-    feats = image_features(media)
-    got = {r.media_id: (r.width, r.height, r.format) for r in feats.collect()}
-    assert got == {0: (4, 3, "fimg"), 1: (16, 9, "fimg")}

@@ -133,8 +133,8 @@ def test_expr_and_pandas_signatures_agree_off_dimension(spark):
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     d = similarity.with_norm(df, "embedding")
-    expr8 = d.select(
-        "vec_id", similarity.lsh_bucket_expr(F.col("dvec"), 8).alias("b")
+    expr8 = similarity.lsh_buckets(df, num_planes=8).select(
+        "vec_id", F.col("bucket").alias("b")
     )
     pandas8 = d.select(
         "vec_id", similarity._lsh_signature_pandas(8)(F.col("dvec")).alias("b")
@@ -168,14 +168,13 @@ def test_bucket_oracle_agrees_beyond_plane_dim(spark):
     """ADVICE r8 #2: for vectors LONGER than PLANE_DIM the DuckDB twin
     used to NULL every plane dot (plane[i] is NULL past 64) and bucket
     everything to 0 while Spark computed real prefix bits. The clamped
-    _dot_prefix must agree with lsh_bucket_expr for short, exact, and
+    _dot_prefix must agree with lsh_buckets for short, exact, and
     long vectors alike."""
     import duckdb
-    from pyspark.sql import functions as F
 
     from clearcare_data_pipeline_spark.operators.similarity import (
         PLANE_DIM,
-        lsh_bucket_expr,
+        lsh_buckets,
     )
     from clearcare_data_pipeline_spark.queries.similarity import _bucket_sql
 
@@ -184,11 +183,8 @@ def test_bucket_oracle_agrees_beyond_plane_dim(spark):
         [float((i * 11) % 9 - 4) for i in range(PLANE_DIM)],  # exact
         [float((i * 13) % 7 - 3) for i in range(PLANE_DIM + 8)],  # long
     ]
-    df = spark.createDataFrame([(i, v) for i, v in enumerate(vecs)], ["i", "dvec"])
-    got_spark = {
-        r["i"]: r["b"]
-        for r in df.select("i", lsh_bucket_expr(F.col("dvec")).alias("b")).collect()
-    }
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vecs)], ["vec_id", "embedding"])
+    got_spark = {r["vec_id"]: r["bucket"] for r in lsh_buckets(df).collect()}
     con = duckdb.connect()
     got_duck = {}
     for i, v in enumerate(vecs):
@@ -280,7 +276,7 @@ def test_flat_broadcast_gated_on_bytes(spark, monkeypatch):
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     copies = df.withColumn("vec_id", df.vec_id + 1000)
     corpus = df.unionByName(copies)
-    est = similarity._estimated_vec_bytes(corpus, similarity.LSH_FLAT_MAX_N)
+    est = similarity._vec_bytes_estimate(3, similarity.LSH_FLAT_MAX_N)
     assert est == similarity.LSH_FLAT_MAX_N * (3 * 8 + 32)
     with_bcast = {(r.a, r.b) for r in similarity.lsh_near_dup_pairs(
         corpus, min_cosine=0.999999).collect()}

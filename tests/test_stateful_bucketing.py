@@ -1,42 +1,6 @@
-"""Stateful streaming operator + bucketed co-located join tests."""
+"""Bucketed co-located join test."""
 
 from __future__ import annotations
-
-import json
-
-
-def test_stateful_running_totals_across_batches(spark, tmp_path):
-    from clearcare_data_pipeline_spark.streaming.stateful import stream_user_running_totals
-
-    inp, out, chk = str(tmp_path / "i"), str(tmp_path / "o"), str(tmp_path / "c")
-    (tmp_path / "i").mkdir()
-
-    def write(name, rows):
-        (tmp_path / "i" / name).write_text("\n".join(json.dumps(r) for r in rows))
-
-    write("a.json", [
-        {"event_id": 1, "ts": "2024-01-01 00:01:00", "user_id": 7, "event_type": "c", "value": 1.5},
-        {"event_id": 2, "ts": "2024-01-01 00:02:00", "user_id": 7, "event_type": "c", "value": 2.5},
-        {"event_id": 3, "ts": "2024-01-01 00:03:00", "user_id": 9, "event_type": "v", "value": 10.0},
-    ])
-    q = stream_user_running_totals(spark, inp, out, chk)
-    q.awaitTermination(120)
-
-    # second run: state must persist through the checkpoint
-    write("b.json", [
-        {"event_id": 4, "ts": "2024-01-01 00:09:00", "user_id": 7, "event_type": "c", "value": 6.0},
-    ])
-    q2 = stream_user_running_totals(spark, inp, out, chk)
-    q2.awaitTermination(120)
-
-    rows = spark.read.parquet(out).collect()
-    latest = {}
-    for r in sorted(rows, key=lambda r: r["event_count"]):
-        latest[r["user_id"]] = r
-    assert latest[7]["event_count"] == 3
-    assert latest[7]["total_value"] == 10.0
-    assert latest[7]["batch_events"] == 1  # only the new event in batch 2
-    assert latest[9]["event_count"] == 1 and latest[9]["total_value"] == 10.0
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
@@ -80,35 +44,3 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         assert "Exchange" in plain._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_transform_with_state_running_max(spark, tmp_path):
-    import pytest
-
-    from clearcare_data_pipeline_spark.streaming.stateful import _HAS_TWS, stream_running_max
-
-    if not _HAS_TWS:
-        pytest.skip("transformWithState needs protobuf (not in this container)")
-
-    inp, out, chk = str(tmp_path / "ti"), str(tmp_path / "to"), str(tmp_path / "tc")
-    (tmp_path / "ti").mkdir()
-
-    def write(name, rows):
-        (tmp_path / "ti" / name).write_text("\n".join(json.dumps(r) for r in rows))
-
-    write("a.json", [
-        {"event_id": 1, "ts": "2024-01-01 00:01:00", "user_id": 7, "event_type": "c", "value": 5.0},
-        {"event_id": 2, "ts": "2024-01-01 00:02:00", "user_id": 7, "event_type": "c", "value": 2.0},
-    ])
-    q = stream_running_max(spark, inp, out, chk)
-    q.awaitTermination(120)
-
-    # lower value in batch 2 must not lower the running max; state persists
-    write("b.json", [
-        {"event_id": 3, "ts": "2024-01-01 00:05:00", "user_id": 7, "event_type": "c", "value": 3.0},
-    ])
-    q2 = stream_running_max(spark, inp, out, chk)
-    q2.awaitTermination(120)
-
-    rows = sorted(spark.read.parquet(out).collect(), key=lambda r: r.n_seen)
-    assert [(r.running_max, r.n_seen) for r in rows if r.user_id == 7] == [(5.0, 2), (5.0, 3)]

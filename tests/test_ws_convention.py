@@ -295,10 +295,8 @@ def test_trim_parity_spark_vs_duckdb(spark):
     """r13 finding, pinned per character: Spark F.trim strips ONLY
     0x20. DuckDB's bare trim ALSO strips Unicode Zs (NBSP U+00A0,
     EM SPACE U+2003) — so every oracle must use the two-arg
-    trim(x, ' ') (_textsql.trim_sql). This test fails if either
-    engine's trim semantics drift."""
-    from clearcare_data_pipeline_spark.queries._textsql import trim_sql
-
+    trim(x, ' '). This test fails if either engine's trim semantics
+    drift."""
     chars = {
         "space": " ", "tab": "\t", "nl": "\n", "vt": "\x0b",
         "ff": "\f", "cr": "\r", "nbsp": "\xa0", "emsp": " ",
@@ -312,9 +310,7 @@ def test_trim_parity_spark_vs_duckdb(spark):
         r["nm"]: r["t"] for r in df.select("nm", F.trim("s").alias("t")).collect()
     }
     for nm, s in probes.items():
-        duck = duckdb.sql(
-            f"SELECT {trim_sql('$1::VARCHAR')}", params=[s]
-        ).fetchone()[0]
+        duck = duckdb.sql("SELECT trim($1::VARCHAR, ' ')", params=[s]).fetchone()[0]
         assert duck == spark_out[nm], (nm, repr(duck), repr(spark_out[nm]))
         # the divergence this guards against is REAL: bare trim differs
         bare = duckdb.sql("SELECT trim($1::VARCHAR)", params=[s]).fetchone()[0]

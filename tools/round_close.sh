@@ -6,7 +6,8 @@
 #   sh tools/round_close.sh 7 --sf1      # + the full sf1 oracle gate
 #
 # Produces/refreshes, in order:
-#   1. green pytest suite                 (correctness of non-relational adapters)
+#   1. green full pytest suite            (slow tests included; pytest.ini
+#                                          deselects them by default)
 #   2. CORRECTNESS_LOCAL_r{N}.json        (all queries vs DuckDB oracles, sf0.01)
 #   3. PLAN_AUDIT.md                      (physical-plan audit, exits nonzero on violations)
 #   4. BENCH_local_r{N}.json              (informal local bench; the driver records
@@ -20,7 +21,7 @@ set -e
 N="${1:?usage: sh tools/round_close.sh <round-number> [--sf1]}"
 R=$(printf 'r%02d' "$N")
 
-python -m pytest tests/ -q
+python -m pytest tests/ -q -m "slow or not slow"
 python tools/verify_local.py --out "CORRECTNESS_LOCAL_${R}.json" /root/testdata/sf0.01
 python tools/plan_audit.py /root/testdata/sf0.01
 python bench.py > "BENCH_local_${R}.json"
